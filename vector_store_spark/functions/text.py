@@ -74,6 +74,35 @@ def tokens_udf(remove_stopwords: bool = True):
     return F.pandas_udf(batch, ArrayType(StringType())).asNondeterministic()
 
 
+def term_postings_udf():
+    """Per-document postings in the same Arrow pass as ``tokens_udf``'s
+    tokenizer: array<struct<term, tf, positions>> with positions ascending,
+    terms in first-occurrence order (empty for a token-less doc). Equal to
+    grouping the posexploded tokens by (term, doc) when doc ids are unique,
+    without the shuffle that grouping needs."""
+    import re
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    pat = re.compile(TOKEN_SPLIT_RE)
+    stop = set(ENGLISH_STOPWORDS)
+
+    def postings(x):
+        pos: dict = {}
+        toks = [t for t in pat.split((x or "").lower()) if t and t not in stop]
+        for i, t in enumerate(toks):
+            pos.setdefault(t, []).append(i)
+        return [{"term": t, "tf": len(p), "positions": p} for t, p in pos.items()]
+
+    def batch(texts):
+        return pd.Series([postings(x) for x in texts])
+
+    return F.pandas_udf(
+        batch, "array<struct<term:string,tf:bigint,positions:array<int>>>"
+    ).asNondeterministic()
+
+
 def word_ngrams(tokens: Column, n: int) -> Column:
     """Word-level n-grams ('shingles') as space-joined strings; empty array when
     the document has fewer than n tokens. (NB Spark sequence(1,0) would yield a

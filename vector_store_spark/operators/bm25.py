@@ -24,11 +24,37 @@ a term's inverted list is O(df(term)) ≈ O(corpus) for common terms, so it is
 NEVER broadcast — only metadata-sized sides (per-query-term df rows, the
 one-row Σidf aggregate) are. Corpus stats (N, avgdl, per-term df) are tiny
 aggregates. Everything is built-in expressions; no Python in the scan path.
+
+Maintenance is segmented, as Tantivy commits each CDC batch as a new segment
+plus deletes (tantivy.rs:383-443): ``update_fts_index`` returns the parent's
+base plus one more ``FtsSegment`` (the added docs' postings and doclens, and
+the ids it tombstones in everything before it), with N, avgdl and per-term df
+derived from the parent's stats and the delta — no corpus-sized re-partition
+or cache. The live index is the base plus every segment, each minus the
+tombstones of later segments. Once the segments hold more than
+``COMPACT_FRACTION`` of the base's documents, the update folds the chain into
+a fresh base instead.
+
+Persisted layout (``write_fts_index`` / ``read_fts_index``)::
+
+    path/postings/term_bucket=*/       base postings
+    path/doclens_bucketed/             base doclens (table bucketed on doc_id)
+    path/df_by_term/, _fts_meta.json   base per-term df and stats
+    path/segments/<id>/postings/term_bucket=*/, doclens/, _segment.json
+    path/_fts_log/v<N>.json            the committed manifest, generation N
+
+The manifest names the live segments and the committed stats; a generation
+is committed by renaming its manifest into place, so a crash before the
+rename still serves the previous generation. A fresh build or a compacted
+base goes through the full layout write, which drops the log and the
+segments before it replaces the base.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import uuid
+from collections import Counter
+from dataclasses import dataclass, field
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
@@ -37,14 +63,45 @@ from pyspark.sql import functions as F
 from vector_store_spark.plans.fts_query import (
     AndNode, NotNode, OrNode, PhraseNode, QueryNode, TermNode, parse_query,
 )
+from vector_store_spark.sources.index_store import HadoopDir, parallel_legs
 
 K1 = 1.2
 B = 0.75
 
+#: live segments may hold at most this fraction of the base's documents; the
+#: update that would exceed it folds base + segments into a fresh base, which
+#: the next write_fts_index persists through the full layout write. It bounds
+#: the per-query union width and the tombstone lists riding in query plans.
+COMPACT_FRACTION = 0.25
+
+
+def _new_id() -> str:
+    return uuid.uuid4().hex[:16]
+
+
+@dataclass(frozen=True)
+class FtsSegment:
+    """One immutable delta of a maintained index."""
+
+    postings: DataFrame  # the added docs' term, doc_id, tf, positions [, term_bucket]
+    doclens: DataFrame   # the added docs' doc_id, dl (0 for a token-less doc)
+    #: ids dead in the base and every earlier segment: the removed ids plus
+    #: the added ones (an upsert is remove + add)
+    tombstones: tuple
+    df: dict             # term -> its df after this segment, for every term it touched
+    n_docs: int          # documents added
+    id: str              # generation id of the index this segment produced
+    #: added doc id -> (dl, terms), kept by update_fts_index so that a later
+    #: removal of these docs needs no lookup; None on a segment read from disk
+    docs: dict | None = None
+
 
 @dataclass
 class FtsIndex:
-    """A built full-text index over (id_col, text_col)."""
+    """A built full-text index over (id_col, text_col).
+
+    ``postings``/``doclens``/``df_by_term`` are the LIVE frames; on a
+    maintained index they are assembled from ``base`` plus ``segments``."""
 
     postings: DataFrame  # term, doc_id, tf, positions array<int> [, term_bucket]
     doclens: DataFrame   # doc_id, dl
@@ -55,6 +112,19 @@ class FtsIndex:
     #: set on persisted indexes whose postings carry term_bucket: term lookups
     #: then add the bucket equality and prune to one directory
     num_buckets: int = 32
+    sum_dl: int | None = None  # Σ dl, kept exact so avgdl matches a rebuild
+    base: FtsIndex | None = field(default=None, repr=False)  # None: self
+    segments: tuple = ()
+    #: generation ids from the base to this index (one per segment after the
+    #: base's); write_fts_index appends only the segments after the one
+    #: committed at a path
+    lineage: tuple = ()
+
+    def __post_init__(self):
+        if self.sum_dl is None:
+            self.sum_dl = round(self.avgdl * self.n_docs)
+        if not self.lineage:
+            self.lineage = (_new_id(),)
 
     def stats(self) -> dict:
         """A2: num_docs + size stats (tantivy.rs:303-317)."""
@@ -71,8 +141,7 @@ def _copartition(df: DataFrame, key: str = "doc_id") -> DataFrame:
 
 def _postings_frame(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(term, doc_id, tf, positions) from one Arrow-batched tokenize pass —
-    the raw postings construction shared by the full build and the
-    incremental add (which must not pay the build's eager stats jobs)."""
+    the raw postings construction of the full build."""
     from vector_store_spark.functions.text import tokens_udf
 
     toks = docs.select(id_col, tokens_udf()(F.col(text_col)).alias("toks"))
@@ -93,7 +162,9 @@ def build_fts_index(docs: DataFrame, id_col: str, text_col: str) -> FtsIndex:
     but N for IDF still counts every document (a separate text-free count).
     Both caches are hash-partitioned on doc_id so every downstream scoring
     join is exchange-free on both sides (term filters and projections
-    preserve the partitioning)."""
+    preserve the partitioning). The input is pinned (``_pinned``), so the
+    index stays a snapshot of ``docs`` as they were built."""
+    docs = _pinned(docs.select(id_col, text_col))
     postings = _copartition(_postings_frame(docs, id_col, text_col)).cache()
     # partitioning-preserving aggregation over the cache: no exchange, no
     # second Python pass
@@ -102,7 +173,157 @@ def build_fts_index(docs: DataFrame, id_col: str, text_col: str) -> FtsIndex:
     sum_dl = doclens.agg(F.sum("dl")).first()[0] or 0
     avgdl = float(sum_dl) / n_docs if n_docs else 0.0
     df_by_term = postings.groupBy("term").agg(F.count("*").alias("df")).cache()
-    return FtsIndex(postings, doclens, int(n_docs), avgdl, id_col, df_by_term)
+    return FtsIndex(postings, doclens, int(n_docs), avgdl, id_col, df_by_term,
+                    sum_dl=int(sum_dl))
+
+
+def _pinned(df: DataFrame) -> DataFrame:
+    """``df`` cut from the files it reads (a lazy local checkpoint, written
+    by the first job that computes it). A cache over a file or table scan
+    is rebuilt from the CURRENT files whenever that path is written again
+    (Spark re-caches every plan reading it) — a snapshot rewritten by CDC
+    would silently change an index built from it, while segment maintenance
+    reads the parent's content for its stats deltas. Frames that read no
+    files (local rows, RDDs) are returned as they are."""
+    it = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while it.hasNext():
+        if it.next().getClass().getSimpleName() in (
+                "LogicalRelation", "DataSourceV2Relation", "HiveTableRelation"):
+            return df.localCheckpoint(eager=False)
+    return df
+
+
+def _term_bucket_col(num_buckets: int) -> Column:
+    return F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int")
+
+
+def _in_set(col: str, values) -> Column:
+    """``col IN (values)`` as ONE parsed SQL expression: ``Column.isin``
+    pays a py4j round trip per literal, which dominated maintenance and
+    query planning once tombstone lists reached a few hundred ids."""
+    def lit(v):
+        if isinstance(v, str):
+            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        if isinstance(v, bool) or not isinstance(v, int):
+            raise TypeError(f"unsupported IN-set value {v!r}")
+        return str(v)
+
+    if not values:
+        return F.lit(False)
+    return F.expr(f"`{col}` IN ({', '.join(lit(v) for v in values)})")
+
+
+def _live_frames(base: FtsIndex, segments: tuple):
+    """(postings, doclens, df_by_term) of base + segments: each part minus the
+    tombstones of every LATER segment, unioned. Tombstones are delta-sized
+    (bounded by COMPACT_FRACTION), so they filter as an IN-set — no join, and
+    the filters keep each part's doc_id partitioning (a union of equally
+    partitioned parts stays partitioned). df_by_term is the base's minus the
+    terms the segments touched, plus those terms' current df as a local
+    relation: no aggregate, so a term lookup stays a filtered scan."""
+    if not segments:
+        return base.postings, base.doclens, base.df_by_term
+    bucketed = "term_bucket" in base.postings.columns
+    parts = [(base.postings, base.doclens)] + [(s.postings, s.doclens) for s in segments]
+    dead: set = set()
+    live = []
+    for i in range(len(parts) - 1, -1, -1):
+        p, d = parts[i]
+        if bucketed and "term_bucket" not in p.columns:
+            p = p.withColumn("term_bucket", _term_bucket_col(base.num_buckets))
+        elif not bucketed and "term_bucket" in p.columns:
+            p = p.drop("term_bucket")
+        if dead:
+            gone = sorted(dead)
+            p = p.where(~_in_set("doc_id", gone))
+            d = d.where(~_in_set("doc_id", gone))
+        live.append((p, d))
+        if i:
+            dead.update(segments[i - 1].tombstones)
+    live.reverse()
+    postings = reduce(lambda a, b: a.unionByName(b), [p for p, _ in live])
+    doclens = reduce(lambda a, b: a.unionByName(b), [d for _, d in live])
+    touched: dict = {}
+    for s in segments:
+        touched.update(s.df)
+    if not touched:
+        return postings, doclens, base.df_by_term
+    spark = base.df_by_term.sparkSession
+    df_by_term = base.df_by_term.where(~_in_set("term", sorted(touched))).unionByName(
+        spark.createDataFrame(sorted((t, n) for t, n in touched.items() if n > 0),
+                              "term string, df bigint"))
+    return postings, doclens, df_by_term
+
+
+def _segment_frames(docs: DataFrame, id_col: str, text_col: str):
+    """The added docs' (postings, doclens), hash-partitioned on doc_id like
+    the base: one Arrow pass builds each doc's postings (no grouping
+    shuffle), one exchange copartitions them into a cache that both frames
+    derive from. A token-less doc keeps one null-term row (``explode_outer``),
+    so it gets a doclens row (dl 0) and a later removal finds it."""
+    from vector_store_spark.functions.text import term_postings_udf
+
+    src = _pinned(docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")))
+    per_doc = src.select("doc_id", term_postings_udf()(F.col("text")).alias("p"))
+    exploded = per_doc.select("doc_id", F.explode_outer("p").alias("e")).select(
+        F.col("e.term").alias("term"), "doc_id",
+        F.coalesce(F.col("e.tf"), F.lit(0).cast("long")).alias("tf"),
+        F.col("e.positions").alias("positions"))
+    grouped = _copartition(exploded).cache()
+    doclens = grouped.groupBy("doc_id").agg(F.sum("tf").cast("int").alias("dl"))
+    postings = grouped.where(F.col("term").isNotNull())
+    return grouped, postings, doclens
+
+
+def _removed_docs(index: FtsIndex, dead: set):
+    """(dl list, per-term doc counts) of the docs in ``dead`` that are live
+    in ``index``. Docs living in a segment this process built are answered
+    from its ``docs``; the rest are one IN-set scan of the base (or of the
+    whole live index when some segment was read from disk)."""
+    base = index.base or index
+    dls, dfs, lookup = [], Counter(), set()
+    if any(s.docs is None for s in index.segments):
+        lookup, frames = dead, index
+    else:
+        frames = base
+        for g in dead:
+            for seg in reversed(index.segments):
+                if g in seg.docs:
+                    dl, terms = seg.docs[g]
+                    dls.append(dl)
+                    dfs.update(terms)
+                    break
+                if g in seg.tombstones:
+                    break
+            else:
+                lookup.add(g)
+    if lookup:
+        gone = sorted(lookup)
+        rows = (
+            frames.doclens.where(_in_set("doc_id", gone)).select(
+                F.col("dl").cast("long").alias("dl"), F.lit(None).cast("string").alias("term"))
+            .unionByName(frames.postings.where(_in_set("doc_id", gone)).select(
+                F.lit(None).cast("long").alias("dl"), "term"))
+            .collect()
+        )
+        dls += [r.dl for r in rows if r.term is None]
+        dfs.update(r.term for r in rows if r.term is not None)
+    return dls, dfs
+
+
+def _parent_df(index: FtsIndex, terms: set) -> dict:
+    """df in ``index`` of ``terms``: the segments' values where they touched
+    the term, else one IN-set lookup of the base's df."""
+    base = index.base or index
+    known: dict = {}
+    for s in index.segments:
+        known.update(s.df)
+    out = {t: known[t] for t in terms if t in known}
+    rest = sorted(terms - set(known))
+    if rest:
+        out.update((r.term, r.df) for r in base.df_by_term.where(
+            _in_set("term", rest)).collect())
+    return out
 
 
 def update_fts_index(
@@ -116,48 +337,60 @@ def update_fts_index(
     searchable after the periodic commit, removed docs gone —
     fts_index/tantivy.rs:383-443, validator fts.rs CRUD tests).
 
-    Re-tokenizes ONLY the added docs; removed/overwritten doc ids are
-    anti-joined out of the existing postings/doclens — the overwritten set
-    comes straight from ``docs_added`` as a DataFrame (no driver-side
-    collect of ids). Corpus stats (N, avgdl, per-term df) are re-aggregated —
-    they are metadata-sized. An upsert is expressed as remove(id) + add(new
-    doc). Work is O(changed docs + stats), not O(corpus)."""
-    # a persisted index's postings carry term_bucket; the maintained result is
-    # in-memory (re-bucketed on the next write_fts_index), so drop it before
-    # unioning with freshly built postings
-    postings, doclens = index.postings.drop("term_bucket"), index.doclens
-    id_type = postings.schema["doc_id"].dataType.simpleString()
-    gone_df = None
-    if doc_ids_removed:
-        spark = postings.sparkSession
-        gone_df = spark.createDataFrame(
-            [(g,) for g in doc_ids_removed], f"doc_id {id_type}"
-        )
+    Tokenizes ONLY the added docs into a new ``FtsSegment`` whose tombstones
+    are the removed ids plus the added ids (an upsert is remove + add). N,
+    Σdl and the df of every touched term follow from the parent's stats and
+    delta-sized collects: the added docs' (doc_id, term, tf) rows (which
+    also materialize the segment), the dl and terms of removed docs — kept
+    on the driver for docs of segments built here, else one IN-set scan of
+    the base — and the base's df of touched terms no segment holds. The
+    parent's corpus-sized frames are never re-partitioned or cached again.
+    Once the segments would hold more than ``COMPACT_FRACTION`` of the
+    base's documents, the result is instead a fresh base: the live frames
+    copartitioned and cached as a full build would (O(corpus), once per
+    compaction). Ids in ``docs_added`` are assumed unique. A base document
+    with no tokens has no doclens row, so its removal does not lower N
+    (documents added by an update keep a dl-0 row and do)."""
+    base = index.base or index
+    spark = index.doclens.sparkSession
+    id_type = index.doclens.schema["doc_id"].dataType.simpleString()
     if docs_added is not None:
-        added_ids = docs_added.select(F.col(id_col).alias("doc_id"))
-        gone_df = added_ids if gone_df is None else gone_df.unionByName(added_ids)
-    if gone_df is not None:
-        gone_df = F.broadcast(gone_df.distinct())
-        postings = postings.join(gone_df, "doc_id", "left_anti")
-        doclens = doclens.join(gone_df, "doc_id", "left_anti")
-    if docs_added is not None:
-        # raw postings for the added docs only — build_fts_index here would
-        # eagerly run its two stats jobs and copartition+cache frames that
-        # are immediately re-partitioned by the union below. One tokenize
-        # pass, cached, feeds both the postings and doclens legs.
-        add_postings = _postings_frame(docs_added, id_col, text_col).cache()
-        add_doclens = add_postings.groupBy("doc_id").agg(
-            F.sum("tf").cast("int").alias("dl"))
-        postings = postings.unionByName(add_postings)
-        doclens = doclens.unionByName(add_doclens)
-    # union/anti-join drop the build-time doc_id partitioning; restore it so
-    # the updated index serves exchange-free joins like a fresh build
-    postings = _copartition(postings).cache()
-    doclens = _copartition(doclens).cache()
-    n_docs, sum_dl = doclens.agg(F.count("*"), F.sum("dl")).first()
+        grouped, seg_postings, seg_doclens = _segment_frames(docs_added, id_col, text_col)
+        rows = grouped.select("doc_id", "term", "tf").collect()
+    else:
+        seg_postings = spark.createDataFrame(
+            [], f"term string, doc_id {id_type}, tf bigint, positions array<int>")
+        seg_doclens = spark.createDataFrame([], f"doc_id {id_type}, dl int")
+        rows = []
+    docs: dict = {}  # added doc id -> (dl, its terms)
+    for r in rows:
+        dl, terms = docs.get(r.doc_id, (0, ()))
+        docs[r.doc_id] = (dl + r.tf, terms + ((r.term,) if r.term is not None else ()))
+    added_df = Counter(t for _, terms in docs.values() for t in terms)
+    dead = set(doc_ids_removed or ()) | set(docs)
+    removed_dl, removed_df = _removed_docs(index, dead)
+    parent_df = _parent_df(index, set(added_df) | set(removed_df))
+    n_docs = index.n_docs + len(docs) - len(removed_dl)
+    sum_dl = index.sum_dl + sum(dl for dl, _ in docs.values()) - sum(removed_dl)
     avgdl = float(sum_dl) / n_docs if n_docs else 0.0
-    df_by_term = postings.groupBy("term").agg(F.count("*").alias("df")).cache()
-    return FtsIndex(postings, doclens, int(n_docs or 0), avgdl, index.id_col, df_by_term)
+    df = {t: parent_df.get(t, 0) + added_df[t] - removed_df[t]
+          for t in set(added_df) | set(removed_df)}
+    seg = FtsSegment(seg_postings, seg_doclens, tuple(sorted(dead)), df,
+                     len(docs), _new_id(), docs)
+    segments = index.segments + (seg,)
+    postings, doclens, df_by_term = _live_frames(base, segments)
+    if sum(s.n_docs for s in segments) <= COMPACT_FRACTION * base.n_docs:
+        return FtsIndex(postings, doclens, n_docs, avgdl, index.id_col, df_by_term,
+                        base.num_buckets, sum_dl, base, segments,
+                        index.lineage + (seg.id,))
+    # compaction: a fresh base, pinned and materialized here so that the
+    # write after it never reads a lineage over files it is about to replace
+    postings = _copartition(_pinned(postings.drop("term_bucket"))).cache()
+    doclens = _copartition(_pinned(doclens)).cache()
+    df_by_term = _pinned(df_by_term).cache()
+    parallel_legs(postings.count, doclens.count, df_by_term.count)
+    return FtsIndex(postings, doclens, n_docs, avgdl, index.id_col, df_by_term,
+                    base.num_buckets, sum_dl)
 
 
 def idf_expr(df_col: Column, n_docs: int) -> Column:
@@ -311,40 +544,143 @@ def _doclens_table(path: str) -> str:
     return "fts_doclens_" + hashlib.md5(path.encode()).hexdigest()[:12]
 
 
-def write_fts_index(index: FtsIndex, path: str, num_buckets: int = 32) -> None:
-    """Persist the index in the serving layout: postings parquet partitioned
-    by a term hash bucket (a term lookup prunes to ONE directory — the
-    inverted-list locality Tantivy gets from its term dictionary), and doclens
-    as a table BUCKETED on doc_id: the serving-time scoring join then
-    exchanges ONLY the pruned inverted list, never the corpus-sized doclens —
-    the disk-postings posture of the reference (tantivy.rs keeps postings and
-    per-doc norms on disk; queries touch only the looked-up terms). Stats are
-    re-aggregated on load (metadata-sized)."""
-    import os
+_LOG, _SEGMENTS = "_fts_log", "segments"
 
+
+def _manifest_name(version: int) -> str:
+    return f"v{version:020d}.json"
+
+
+def _manifest_versions(store: HadoopDir) -> list:
+    """Committed manifest versions; uncommitted temp files never match."""
+    import re
+
+    return [int(n[1:-5]) for n in store.ls(_LOG) if re.fullmatch(r"v\d{20}\.json", n)]
+
+
+def _latest_manifest(store: HadoopDir):
+    """(version, manifest) of the committed generation, (0, None) for a
+    layout without one."""
+    versions = _manifest_versions(store)
+    if not versions:
+        return 0, None
+    v = max(versions)
+    return v, store.read_json(_LOG, _manifest_name(v))
+
+
+def _commit_manifest(store: HadoopDir, version: int, manifest: dict) -> None:
+    """Commit a generation: write its manifest to a temp file, then rename
+    it to the next version (a rename to a new name, atomic and defined on
+    every Hadoop filesystem). Older manifests are dropped after the
+    commit."""
+    tmp = f"_v{version}.json.tmp"
+    store.write_json(manifest, _LOG, tmp)
+    store.rename((_LOG, tmp), (_LOG, _manifest_name(version)))
+    for v in _manifest_versions(store):
+        if v < version:
+            store.delete(_LOG, _manifest_name(v))
+
+
+def _segment_schemas(id_type: str):
+    return (f"term string, doc_id {id_type}, tf bigint, positions array<int>, "
+            "term_bucket int", f"doc_id {id_type}, dl int")
+
+
+def _manifest_stats(index: FtsIndex) -> dict:
+    return {"n_docs": index.n_docs, "sum_dl": index.sum_dl, "avgdl": index.avgdl}
+
+
+def write_fts_index(index: FtsIndex, path: str, num_buckets: int = 32) -> None:
+    """Persist the index (layout in the module docstring).
+
+    When ``index`` descends from the generation committed at ``path`` (its
+    lineage holds the manifest's index id), only the segments after that
+    generation are written — each an immutable ``segments/<id>`` directory
+    of term-bucketed delta postings, delta doclens and ``_segment.json``
+    (tombstones, the df of every term it touched, doc count) — and one
+    manifest rename
+    commits them: the base is not touched, and a crash before the rename
+    serves the previous generation (the next write drops the orphans).
+    Rewriting an already committed generation is a no-op. Any other index —
+    a fresh build, a compacted base (``update_fts_index`` past
+    ``COMPACT_FRACTION``) or a foreign lineage — takes the full write below
+    and a manifest with no segments."""
+    store = HadoopDir(index.doclens.sparkSession, path)
+    version, manifest = _latest_manifest(store)
+    if (manifest is not None and manifest["num_buckets"] == num_buckets
+            and manifest["index_id"] in index.lineage):
+        new = index.segments[index.lineage.index(manifest["index_id"]):]
+        if new:
+            _append_segments(store, index, version, manifest, new)
+        return
+    _write_base(index, store, num_buckets)
+
+
+def _append_segments(store: HadoopDir, index: FtsIndex, version: int, manifest: dict,
+                     new: tuple) -> None:
+    live = {s["id"] for s in manifest["segments"]}
+    for name in store.ls(_SEGMENTS):
+        if name not in live:  # left by a write that crashed before its commit
+            store.delete(_SEGMENTS, name)
+    for name in store.ls(_LOG):
+        if name.endswith(".tmp"):
+            store.delete(_LOG, name)
+    legs = []
+    for seg in new:
+        p = seg.postings
+        if "term_bucket" not in p.columns:
+            p = p.withColumn("term_bucket", _term_bucket_col(manifest["num_buckets"]))
+        # delta-sized frames over the segment's cache: one task writes each
+        legs.append(lambda p=p, seg=seg: p.coalesce(1).write.partitionBy(
+            "term_bucket").parquet(store.uri(_SEGMENTS, seg.id, "postings")))
+        legs.append(lambda seg=seg: seg.doclens.coalesce(1).write.parquet(
+            store.uri(_SEGMENTS, seg.id, "doclens")))
+    parallel_legs(*legs)
+    for seg in new:
+        store.write_json({"tombstones": list(seg.tombstones), "df": seg.df,
+                          "n_docs": seg.n_docs}, _SEGMENTS, seg.id, "_segment.json")
+    _commit_manifest(store, version + 1, {
+        **manifest, **_manifest_stats(index), "index_id": index.lineage[-1],
+        "lineage": manifest["lineage"] + [s.id for s in new],
+        "segments": manifest["segments"] + [{"id": s.id} for s in new],
+    })
+
+
+def _write_base(index: FtsIndex, store: HadoopDir, num_buckets: int) -> None:
+    """The full write: postings parquet partitioned by a term hash bucket (a
+    term lookup prunes to ONE directory — the inverted-list locality Tantivy
+    gets from its term dictionary), and doclens as a table BUCKETED on
+    doc_id: the serving-time scoring join then exchanges ONLY the pruned
+    inverted list, never the corpus-sized doclens — the disk-postings posture
+    of the reference (tantivy.rs keeps postings and per-doc norms on disk;
+    queries touch only the looked-up terms). The corpus stats are committed
+    with the layout (sidecar + vocab-sized df parquet), as Tantivy stores
+    segment stats in the committed index rather than recounting at open.
+
+    The manifest log and segments go first, so no manifest ever pairs old
+    segments with the new base; this write itself replaces the base in
+    place, as full rebuilds always have."""
     from vector_store_spark.sources.index_store import fresh_dir, write_local_index
 
-    postings = index.postings.withColumn(
-        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int")
-    )
+    path = store.root
+    store.delete(_LOG)
+    store.delete(_SEGMENTS)
+    postings = index.postings.drop("term_bucket").withColumn(
+        "term_bucket", _term_bucket_col(num_buckets))
     spark = index.doclens.sparkSession
     tbl = _doclens_table(path)
     # directory/catalog prep stays serialized (idempotent persist: DROP on an
     # external table leaves its files, so clear the location too or the CTAS
     # below fails on a rewrite of the same path)
-    fresh_dir(os.path.join(path, "postings"))  # full persist, not incremental
+    fresh_dir(store.uri("postings"))
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    fresh_dir(os.path.join(path, "doclens_bucketed"))
-    # the three layout legs are independent reads of the index's cached
-    # frames (build_fts_index materializes postings/doclens before any
-    # caller can persist) — submit them as CONCURRENT Spark jobs instead of
-    # paying three sequential job latencies (local[n] schedules them onto
-    # idle cores; on a cluster the scheduler interleaves stages the same way)
-    from concurrent.futures import ThreadPoolExecutor
+    fresh_dir(store.uri("doclens_bucketed"))
 
+    # the three layout legs are independent reads of the index's cached
+    # frames — CONCURRENT Spark jobs instead of three sequential latencies
     def _w_postings():
         spark.sparkContext.setJobDescription("fts_persist: postings")
-        write_local_index(postings, os.path.join(path, "postings"), ["term_bucket"])
+        write_local_index(postings, store.uri("postings"), ["term_bucket"])
 
     def _w_doclens():
         spark.sparkContext.setJobDescription("fts_persist: doclens CTAS")
@@ -354,64 +690,62 @@ def write_fts_index(index: FtsIndex, path: str, num_buckets: int = 32) -> None:
             .format("parquet")
             .bucketBy(num_buckets, "doc_id")
             .sortBy("doc_id")
-            .option("path", os.path.join(path, "doclens_bucketed"))
+            .option("path", store.uri("doclens_bucketed"))
             .saveAsTable(tbl)
         )
 
-    # persist the corpus stats WITH the layout: N/avgdl to a sidecar
-    # (metadata-sized) and per-term df as parquet (vocab-sized, term-pruned
-    # lookups). Serving startup then reads a sidecar instead of re-scanning
-    # corpus-sized postings/doclens — Tantivy likewise stores segment stats
-    # in the committed index rather than recounting at open (tantivy.rs).
-    import json
-
     def _w_df_by_term():
         spark.sparkContext.setJobDescription("fts_persist: df_by_term")
-        index.df_by_term.write.mode("overwrite").parquet(
-            os.path.join(path, "df_by_term"))
+        index.df_by_term.write.mode("overwrite").parquet(store.uri("df_by_term"))
 
-    with ThreadPoolExecutor(max_workers=3) as ex:
-        for f in [ex.submit(w) for w in (_w_postings, _w_doclens, _w_df_by_term)]:
-            f.result()  # propagate the first failure
-    with open(os.path.join(path, "_fts_meta.json"), "w") as f:
-        json.dump(
-            {"n_docs": index.n_docs, "avgdl": index.avgdl,
-             "num_buckets": num_buckets},
-            f,
-        )
+    parallel_legs(_w_postings, _w_doclens, _w_df_by_term)
+    stats = _manifest_stats(index)
+    store.write_json({"n_docs": index.n_docs, "avgdl": index.avgdl,
+                      "num_buckets": num_buckets}, "_fts_meta.json")
+    _commit_manifest(store, 1, {
+        **stats, "index_id": index.lineage[-1], "lineage": [index.lineage[-1]],
+        "num_buckets": num_buckets, "base": stats, "segments": [],
+        "id_type": index.doclens.schema["doc_id"].dataType.simpleString(),
+    })
 
 
 def read_fts_index(spark, path: str, num_buckets: int = 32) -> FtsIndex:
-    """Load a persisted index. Term lookups against ``postings`` carry the
-    ``term_bucket`` column, so callers filtering on (term_bucket, term) get
-    partition pruning; Bm25Executor's term filter composes with it. doclens
-    comes back as the bucketed table (scans report HashPartitioning(doc_id),
-    so scoring joins add no exchange on the corpus side); pre-bucketing
-    layouts fall back to the plain parquet directory."""
-    import os
-
-    import json
-
-    postings = spark.read.parquet(os.path.join(path, "postings"))
+    """Load the committed generation: the base plus every live segment of
+    the manifest, each minus later tombstones (``_live_frames``); a layout
+    without a manifest is a bare base. Term lookups against ``postings``
+    carry the ``term_bucket`` column, so callers filtering on (term_bucket,
+    term) get partition pruning in the base and every segment;
+    Bm25Executor's term filter composes with it. The base doclens comes back
+    as the bucketed table (scans report HashPartitioning(doc_id), so scoring
+    joins add no exchange on the corpus side while no segment is live);
+    pre-bucketing layouts fall back to the plain parquet directory. The
+    returned index keeps the manifest's lineage, so an update of it can be
+    written back as a segment."""
+    store = HadoopDir(spark, path)
+    _, manifest = _latest_manifest(store)
+    postings = spark.read.parquet(store.uri("postings"))
     tbl = _doclens_table(path)
     if spark.catalog.tableExists(tbl):
         doclens = spark.table(tbl)
-    elif os.path.isdir(os.path.join(path, "doclens_bucketed")):
+    elif store.exists("doclens_bucketed"):
         # a NEW session reading a persisted dir: saveAsTable metadata is
         # session-scoped, so re-read the bucket files as plain parquet (the
         # values are identical; only the exchange-free partitioning report is
         # lost until re-registered)
-        doclens = spark.read.parquet(os.path.join(path, "doclens_bucketed"))
+        doclens = spark.read.parquet(store.uri("doclens_bucketed"))
     else:  # pre-bucketing layout
-        doclens = spark.read.parquet(os.path.join(path, "doclens"))
-    meta_path = os.path.join(path, "_fts_meta.json")
-    if os.path.isfile(meta_path):
-        # committed stats: open cost is a sidecar read + a vocab-sized scan,
+        doclens = spark.read.parquet(store.uri("doclens"))
+    if manifest is not None:
+        # committed stats: open cost is a manifest read + a vocab-sized scan,
         # NOT an O(corpus) re-aggregation of postings/doclens
-        with open(meta_path) as f:
-            meta = json.load(f)
-        n_docs, avgdl = meta["n_docs"], meta["avgdl"]
-        df_by_term = spark.read.parquet(os.path.join(path, "df_by_term")).cache()
+        num_buckets = manifest["num_buckets"]
+        n_docs, sum_dl = manifest["base"]["n_docs"], manifest["base"]["sum_dl"]
+        avgdl = manifest["base"]["avgdl"]
+        df_by_term = spark.read.parquet(store.uri("df_by_term")).cache()
+    elif store.exists("_fts_meta.json"):
+        meta = store.read_json("_fts_meta.json")
+        n_docs, avgdl, sum_dl = meta["n_docs"], meta["avgdl"], None
+        df_by_term = spark.read.parquet(store.uri("df_by_term")).cache()
     else:  # pre-sidecar layout: legacy re-aggregation
         n_docs, sum_dl = doclens.agg(F.count("*"), F.sum("dl")).first()
         avgdl = float(sum_dl) / n_docs if n_docs else 0.0
@@ -419,21 +753,36 @@ def read_fts_index(spark, path: str, num_buckets: int = 32) -> FtsIndex:
     # postings KEEP term_bucket: Bm25Executor's term lookups add the bucket
     # equality, so every query shape (term/AND/OR/NOT/phrase) scans only the
     # matching directories of the persisted layout
-    return FtsIndex(
-        postings, doclens, int(n_docs), avgdl, "doc_id", df_by_term,
-        num_buckets=num_buckets,
-    )
+    base = FtsIndex(postings, doclens, int(n_docs or 0), avgdl, "doc_id", df_by_term,
+                    num_buckets=num_buckets, sum_dl=sum_dl)
+    if manifest is None:
+        return base
+    if not manifest["segments"]:
+        base.lineage = tuple(manifest["lineage"])
+        return base
+    p_schema, d_schema = _segment_schemas(manifest["id_type"])
+    segments = []
+    for s in manifest["segments"]:
+        meta = store.read_json(_SEGMENTS, s["id"], "_segment.json")
+        segments.append(FtsSegment(
+            spark.read.schema(p_schema).parquet(store.uri(_SEGMENTS, s["id"], "postings")),
+            spark.read.schema(d_schema).parquet(store.uri(_SEGMENTS, s["id"], "doclens")),
+            tuple(meta["tombstones"]), meta["df"], meta["n_docs"], s["id"]))
+    segments = tuple(segments)
+    live_postings, live_doclens, live_df = _live_frames(base, segments)
+    return FtsIndex(live_postings, live_doclens, manifest["n_docs"], manifest["avgdl"],
+                    "doc_id", live_df, num_buckets, manifest["sum_dl"], base, segments,
+                    tuple(manifest["lineage"]))
 
 
 def persisted_term_postings(spark, path: str, term: str, num_buckets: int = 32):
-    """The pruned single-term lookup: filter (term_bucket, term) so the scan
-    reads one directory. Returns the matching postings DataFrame."""
-    import pyspark.sql.functions as SF
-
+    """The pruned single-term lookup over the committed generation: filter
+    (term_bucket, term) so the base and every live segment scan one
+    directory each. Returns the matching live postings DataFrame."""
     from vector_store_spark.functions.hashing import term_bucket
 
-    postings = spark.read.parquet(f"{path}/postings")
-    return postings.where(
-        (SF.col("term_bucket") == term_bucket(term, num_buckets))
-        & (SF.col("term") == term)
+    ix = read_fts_index(spark, path, num_buckets)
+    return ix.postings.where(
+        (F.col("term_bucket") == term_bucket(term, ix.num_buckets))
+        & (F.col("term") == term)
     )

@@ -61,6 +61,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vector_store_spark.functions.distance import similarity_expr
+from vector_store_spark.sources.index_store import HadoopDir, parallel_legs
 from vector_store_spark.types import SpaceType
 
 #: level cap — slice-sized graphs essentially never exceed this
@@ -579,7 +580,7 @@ def hnsw_build(
             os.path.join(path, "payload"))
 
     # payload hides under the graph compute (guide §1.2)
-    _parallel_legs(_graph_leg, _payload_leg)
+    parallel_legs(_graph_leg, _payload_leg)
     sliced.unpersist()
     meta = {
         "space": space.value, "m": m, "ef_construction": ef_construction,
@@ -685,19 +686,6 @@ def _update_dead_stats(path: str, meta: dict, updates: dict) -> None:
         json.dump(meta, f)
 
 
-def _parallel_legs(*legs) -> None:
-    """Run independent store-maintenance legs as CONCURRENT Spark jobs
-    (thread-per-leg; Spark schedules jobs from multiple threads onto idle
-    cores). Callers guarantee the legs touch disjoint directories and read
-    only materialized caches / pre-overwrite files. The first failure
-    propagates after all legs settle."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(legs)) as ex:
-        for f in [ex.submit(leg) for leg in legs]:
-            f.result()
-
-
 def _staged_payload_commit(spark, path: str, frame: DataFrame, touched) -> None:
     """Rewrite the ``touched`` slices of ``path/payload`` with ``frame`` via
     a STAGING directory + per-partition rename (VERDICT r17 Next #3).
@@ -712,32 +700,30 @@ def _staged_payload_commit(spark, path: str, frame: DataFrame, touched) -> None:
     partitions PRESENT in the output, so an emptied slice would keep its
     stale files) uses the same listing. All fs ops go through the Hadoop
     FileSystem API (local paths and HDFS/S3A alike); rename is per-partition
-    dir, the same commit granularity dynamic partition overwrite has."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    base = os.path.join(path, "payload")
-    staging = os.path.join(path, "_payload_staging")
-    frame.repartition("slice").write.partitionBy("slice").mode(
-        "overwrite").parquet(staging)
-    sp = Path(staging)
-    fs = sp.getFileSystem(hconf)
+    dir, the same commit granularity dynamic partition overwrite has.
+
+    The staging dir must hold ONLY this commit's slices: a leftover from a
+    commit that crashed is deleted first, and the write is a static
+    overwrite whatever the session's partitionOverwriteMode (a dynamic one
+    would keep stale ``slice=`` dirs and the listing would rename them into
+    the live payload). A rename that returns false raises: the destination
+    slice was just deleted, so a silent false would lose it."""
+    store = HadoopDir(spark, path)
+    store.delete("_payload_staging")
+    frame.repartition("slice").write.partitionBy("slice").option(
+        "partitionOverwriteMode", "static").mode("overwrite").parquet(
+        store.uri("_payload_staging"))
     present = set()
-    for st in fs.listStatus(sp):
-        name = st.getPath().getName()
+    for name in store.ls("_payload_staging"):
         if not name.startswith("slice="):
             continue  # _SUCCESS and friends
         present.add(int(name.split("=", 1)[1]))
-        dst = Path(f"{base}/{name}")
-        if fs.exists(dst):
-            fs.delete(dst, True)
-        fs.rename(st.getPath(), dst)
+        store.delete("payload", name)
+        store.rename(("_payload_staging", name), ("payload", name))
     for s in touched:
         if int(s) not in present:
-            p = Path(f"{base}/slice={int(s)}")
-            if fs.exists(p):
-                fs.delete(p, True)
-    fs.delete(sp, True)
+            store.delete("payload", f"slice={int(s)}")
+    store.delete("_payload_staging")
 
 
 def _round_half_away(d: float, round_to: int) -> float:
@@ -1291,7 +1277,6 @@ def hnsw_upsert(
                                      max_lvl, deleted, qscale=qscale,
                                      quant=quant)])
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     out = grouped.groupBy("slice").cogroup(graph.groupBy("slice")).applyInPandas(
         ins, _GRAPH_SCHEMA)
     # materialize before overwriting the directory the plan reads from: the
@@ -1308,7 +1293,8 @@ def hnsw_upsert(
     new_stats = _dead_stats_from_blobs(out)
 
     def _graph_leg():
-        out.write.partitionBy("slice").mode("overwrite").parquet(
+        out.write.partitionBy("slice").option(
+            "partitionOverwriteMode", "dynamic").mode("overwrite").parquet(
             os.path.join(path, "graph"))
         _update_dead_stats(path, meta, new_stats)
 
@@ -1350,7 +1336,7 @@ def hnsw_upsert(
     # only materialized caches (`out`, `sliced`) plus the pre-overwrite
     # payload files — run them as concurrent Spark jobs; the payload merge
     # hides under the graph write (guide §1.2: fewer sequential actions)
-    _parallel_legs(_graph_leg, _payload_leg)
+    parallel_legs(_graph_leg, _payload_leg)
     out.unpersist()
     sliced.unpersist()
     if rem is not None:
@@ -1461,7 +1447,6 @@ def hnsw_compact(spark, path: str, min_deleted_frac: float = 0.2) -> list:
                                 entry2, max2, qscale=qscale, quant=quant))
         return pd.DataFrame(rows)
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     out = graph.groupBy("slice").applyInPandas(rebuild, _GRAPH_SCHEMA)
     out = out.cache()
     # census BEFORE the overwrite (the write uncaches plans reading the
@@ -1470,7 +1455,8 @@ def hnsw_compact(spark, path: str, min_deleted_frac: float = 0.2) -> list:
     new_stats = _dead_stats_from_blobs(out)
 
     def _graph_leg():
-        out.write.partitionBy("slice").mode("overwrite").parquet(
+        out.write.partitionBy("slice").option(
+            "partitionOverwriteMode", "dynamic").mode("overwrite").parquet(
             os.path.join(path, "graph"))
         _update_dead_stats(path, meta, new_stats)
 
@@ -1485,7 +1471,7 @@ def hnsw_compact(spark, path: str, min_deleted_frac: float = 0.2) -> list:
         _staged_payload_commit(spark, path, newpay, todo)
 
     # disjoint directories, independent inputs — concurrent legs
-    _parallel_legs(_graph_leg, _payload_leg)
+    parallel_legs(_graph_leg, _payload_leg)
     out.unpersist()
     return todo
 
@@ -1525,7 +1511,6 @@ def _tombstone_only_df(spark, path: str, meta: dict, rem: DataFrame) -> None:
         d["deleted"] = deleted.tobytes()
         return pd.DataFrame([d])
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     out = dels.groupBy("slice").cogroup(graph.groupBy("slice")).applyInPandas(
         mark, _GRAPH_SCHEMA)
     out = out.cache()
@@ -1534,7 +1519,8 @@ def _tombstone_only_df(spark, path: str, meta: dict, rem: DataFrame) -> None:
     new_stats = _dead_stats_from_blobs(out)
 
     def _graph_leg():
-        out.write.partitionBy("slice").mode("overwrite").parquet(
+        out.write.partitionBy("slice").option(
+            "partitionOverwriteMode", "dynamic").mode("overwrite").parquet(
             os.path.join(path, "graph"))
         _update_dead_stats(path, meta, new_stats)
 
@@ -1546,7 +1532,7 @@ def _tombstone_only_df(spark, path: str, meta: dict, rem: DataFrame) -> None:
         _staged_payload_commit(spark, path, kept, touched)
 
     # disjoint directories, independent inputs — concurrent legs
-    _parallel_legs(_graph_leg, _payload_leg)
+    parallel_legs(_graph_leg, _payload_leg)
     out.unpersist()
 
 
@@ -1580,7 +1566,6 @@ def _tombstone_only(spark, path: str, meta: dict, gone: list) -> None:
             rows.append(d)
         return pd.DataFrame(rows)
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     out = graph.groupBy("slice").applyInPandas(mark, _GRAPH_SCHEMA)
     out = out.cache()
     # census BEFORE the overwrite (the write uncaches plans reading the
@@ -1588,7 +1573,8 @@ def _tombstone_only(spark, path: str, meta: dict, gone: list) -> None:
     new_stats = _dead_stats_from_blobs(out)
 
     def _graph_leg():
-        out.write.partitionBy("slice").mode("overwrite").parquet(
+        out.write.partitionBy("slice").option(
+            "partitionOverwriteMode", "dynamic").mode("overwrite").parquet(
             os.path.join(path, "graph"))
         _update_dead_stats(path, meta, new_stats)
 
@@ -1600,5 +1586,5 @@ def _tombstone_only(spark, path: str, meta: dict, gone: list) -> None:
         _staged_payload_commit(spark, path, kept, touched)
 
     # disjoint directories, independent inputs — concurrent legs
-    _parallel_legs(_graph_leg, _payload_leg)
+    parallel_legs(_graph_leg, _payload_leg)
     out.unpersist()

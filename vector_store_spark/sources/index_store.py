@@ -36,6 +36,77 @@ def fresh_dir(path: str) -> None:
         shutil.rmtree(path, ignore_errors=True)
 
 
+class HadoopDir:
+    """One index directory through the Hadoop FileSystem API (local paths,
+    HDFS and S3A alike): listings, small JSON files, deletes and renames.
+    Every failure raises — a delete or rename that returns false included —
+    so no commit step can fail silently."""
+
+    def __init__(self, spark, path: str):
+        self.root = path.rstrip("/")
+        self._Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+        self._io = spark.sparkContext._jvm.org.apache.commons.io.IOUtils
+        self.fs = self._Path(self.root).getFileSystem(
+            spark.sparkContext._jsc.hadoopConfiguration())
+
+    def uri(self, *parts: str) -> str:
+        return "/".join((self.root,) + parts)
+
+    def _p(self, parts):
+        return self._Path(self.uri(*parts))
+
+    def exists(self, *parts: str) -> bool:
+        return self.fs.exists(self._p(parts))
+
+    def ls(self, *parts: str) -> list:
+        if not self.exists(*parts):
+            return []
+        return [st.getPath().getName() for st in self.fs.listStatus(self._p(parts))]
+
+    def read_json(self, *parts: str):
+        import json
+
+        stream = self.fs.open(self._p(parts))
+        try:
+            return json.loads(self._io.toString(stream, "UTF-8"))
+        finally:
+            stream.close()
+
+    def write_json(self, obj, *parts: str) -> None:
+        import json
+
+        out = self.fs.create(self._p(parts), True)
+        try:
+            out.write(bytearray(json.dumps(obj).encode()))
+        finally:
+            out.close()
+
+    def delete(self, *parts: str) -> None:
+        if self.exists(*parts) and not self.fs.delete(self._p(parts), True):
+            raise IOError(f"delete failed: {self.uri(*parts)}")
+
+    def _fs_rename(self, src, dst) -> bool:
+        return self.fs.rename(src, dst)
+
+    def rename(self, src: tuple, dst: tuple) -> None:
+        """Rename ``root/src...`` to ``root/dst...``; raises on false."""
+        if not self._fs_rename(self._p(src), self._p(dst)):
+            raise IOError(f"rename failed: {self.uri(*src)} -> {self.uri(*dst)}")
+
+
+def parallel_legs(*legs) -> None:
+    """Run independent store-maintenance legs as CONCURRENT Spark jobs
+    (thread-per-leg; Spark schedules jobs from multiple threads onto idle
+    cores). Callers guarantee the legs touch disjoint directories and read
+    only materialized caches / pre-overwrite files. The first failure
+    propagates after all legs settle."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=len(legs)) as ex:
+        for f in [ex.submit(leg) for leg in legs]:
+            f.result()
+
+
 def write_local_index(
     df: DataFrame,
     path: str,
@@ -57,8 +128,7 @@ def write_local_index(
         df = df.repartition(*[F.col(c) for c in partition_cols])
     writer = df.write.partitionBy(*partition_cols)
     if overwrite_dynamic:
-        df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        writer = writer.mode("overwrite")
+        writer = writer.option("partitionOverwriteMode", "dynamic").mode("overwrite")
     writer.parquet(path)
 
 

@@ -239,10 +239,9 @@ class CdcSnapshotSink:
             merged = merged.cache()
 
         # rewrite only the affected buckets (dynamic partition overwrite)
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         (
             merged.repartition(max(1, len(affected)), F.col(BUCKET_COL))
-            .write.mode("overwrite")
+            .write.option("partitionOverwriteMode", "dynamic").mode("overwrite")
             .partitionBy(BUCKET_COL, *self.derived_partition_cols)
             .parquet(self.snapshot_dir)
         )

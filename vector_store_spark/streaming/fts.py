@@ -220,7 +220,7 @@ class FtsStreamSink:
         def _rewrite(df: DataFrame, d: str, present: set) -> None:
             (
                 df.repartition(max(1, len(affected)), F.col(BUCKET_COL))
-                .write.mode("overwrite")
+                .write.option("partitionOverwriteMode", "dynamic").mode("overwrite")
                 .partitionBy(BUCKET_COL)
                 .parquet(d)
             )
@@ -232,7 +232,6 @@ class FtsStreamSink:
                     os.path.join(d, f"{BUCKET_COL}={b}"), ignore_errors=True
                 )
 
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         with ThreadPoolExecutor(max_workers=2) as ex:
             for f in [ex.submit(_rewrite, *leg) for leg in legs]:
                 f.result()  # propagate the first failure
