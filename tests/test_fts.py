@@ -341,7 +341,7 @@ def test_write_fts_index_idempotent(spark, sf_dir, tmp_path):
 
 
 def test_persisted_stats_sidecar(spark, sf_dir, tmp_path):
-    """write_fts_index commits the corpus stats WITH the layout (sidecar +
+    """write_fts_index commits the corpus stats WITH the layout (manifest +
     vocab-sized df_by_term parquet), so read_fts_index serves without an
     O(corpus) re-aggregation of postings/doclens — and the stats are
     identical to the build's."""
@@ -355,7 +355,8 @@ def test_persisted_stats_sidecar(spark, sf_dir, tmp_path):
     ix = build_fts_index(docs, "doc_id", "text")
     path = str(tmp_path / "fts_meta_ix")
     write_fts_index(ix, path)
-    assert os.path.isfile(os.path.join(path, "_fts_meta.json"))
+    log = os.path.join(path, "_fts_log")
+    assert [n for n in os.listdir(log) if n.endswith(".json")], os.listdir(log)
     assert os.path.isdir(os.path.join(path, "df_by_term"))
     loaded = read_fts_index(spark, path)
     assert loaded.n_docs == ix.n_docs

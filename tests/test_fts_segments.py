@@ -22,18 +22,19 @@ def _docs(spark, rows: dict):
 
 
 def _waves(seed: int = 7):
-    """Five waves of (upserts, inserts, deletes) over ids 0..99; wave 4
-    re-inserts an id that wave 2 deleted."""
+    """Five waves of (upserts, inserts, deletes) over ids 0..99, 11
+    tombstones each, so that with COMPACT_FRACTION 0.25 of the 100-doc base
+    only wave 3 compacts; wave 4 re-inserts an id that wave 2 deleted."""
     rng = random.Random(seed)
     live = {i: _text(rng) for i in range(100)}
     base = dict(live)
     waves, next_id = [], 100
     for w in range(5):
         ids = sorted(live)
-        upserts = {k: _text(rng) for k in rng.sample(ids, 8)}
-        inserts = {next_id + j: _text(rng) for j in range(4)}
-        next_id += 4
-        deletes = rng.sample([k for k in ids if k not in upserts], 3)
+        upserts = {k: _text(rng) for k in rng.sample(ids, 6)}
+        inserts = {next_id + j: _text(rng) for j in range(3)}
+        next_id += 3
+        deletes = rng.sample([k for k in ids if k not in upserts], 2)
         if w == 3:
             inserts[waves[1][1][0]] = _text(rng)  # re-insert a deleted id
         added = {**upserts, **inserts}
@@ -86,8 +87,41 @@ def test_waves_match_clean_rebuild(spark, tmp_path):
         ref = _answers(build_fts_index(_docs(spark, live), "doc_id", "text"))
         _assert_same(ix, ref)
         _assert_same(read_fts_index(spark, path), ref)
-    assert any(compacted) and not compacted[1] and not compacted[4], compacted
+    assert compacted == [False, False, True, False, False], compacted
     assert jobs[4] <= jobs[1], jobs
+
+
+def test_delete_only_waves_compact(spark, tmp_path):
+    """Removals alone count toward compaction: waves that only delete add
+    segments of tombstones until they outnumber COMPACT_FRACTION of the
+    base, and the next one folds them (and the deleted docs) into a fresh
+    base."""
+    from vector_store_spark.operators.bm25 import (
+        COMPACT_FRACTION, build_fts_index, read_fts_index, update_fts_index,
+        write_fts_index,
+    )
+
+    base, _ = _waves(13)
+    path = str(tmp_path / "fts")
+    live = dict(base)
+    ix = build_fts_index(_docs(spark, live), "doc_id", "text")
+    write_fts_index(ix, path)
+    per_wave = 8
+    compacted = []
+    for w in range(4):
+        gone = sorted(live)[:per_wave]
+        ix = update_fts_index(ix, doc_ids_removed=gone)
+        write_fts_index(ix, path)
+        compacted.append(not ix.segments)
+        for k in gone:
+            live.pop(k)
+        if w >= 2:  # three delete-only segments, then the compacted base
+            ref = _answers(build_fts_index(_docs(spark, live), "doc_id", "text"))
+            _assert_same(ix, ref)
+            _assert_same(read_fts_index(spark, path), ref)
+    assert (w + 1) * per_wave > COMPACT_FRACTION * len(base) >= w * per_wave
+    assert compacted == [False, False, False, True], compacted
+    assert update_fts_index(ix, doc_ids_removed=[]) is ix
 
 
 def test_update_of_read_index_appends_segment(spark, tmp_path):

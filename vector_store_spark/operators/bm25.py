@@ -31,19 +31,21 @@ base plus one more ``FtsSegment`` (the added docs' postings and doclens, and
 the ids it tombstones in everything before it), with N, avgdl and per-term df
 derived from the parent's stats and the delta — no corpus-sized re-partition
 or cache. The live index is the base plus every segment, each minus the
-tombstones of later segments. Once the segments hold more than
-``COMPACT_FRACTION`` of the base's documents, the update folds the chain into
-a fresh base instead.
+tombstones of later segments. Once the segments' tombstones (every document
+they add or remove) outnumber ``COMPACT_FRACTION`` of the base's documents,
+the update folds the chain into a fresh base instead.
 
 Persisted layout (``write_fts_index`` / ``read_fts_index``)::
 
     path/postings/term_bucket=*/       base postings
     path/doclens_bucketed/             base doclens (table bucketed on doc_id)
-    path/df_by_term/, _fts_meta.json   base per-term df and stats
+    path/df_by_term/                   base per-term df
     path/segments/<id>/postings/term_bucket=*/, doclens/, _segment.json
     path/_fts_log/v<N>.json            the committed manifest, generation N
 
-The manifest names the live segments and the committed stats; a generation
+The manifest names the live segments and holds the base's and the live
+index's stats (a layout written before manifests keeps them in
+``_fts_meta.json``, which is still read); a generation
 is committed by renaming its manifest into place, so a crash before the
 rename still serves the previous generation. A fresh build or a compacted
 base goes through the full layout write, which drops the log and the
@@ -68,10 +70,13 @@ from vector_store_spark.sources.index_store import HadoopDir, parallel_legs
 K1 = 1.2
 B = 0.75
 
-#: live segments may hold at most this fraction of the base's documents; the
-#: update that would exceed it folds base + segments into a fresh base, which
-#: the next write_fts_index persists through the full layout write. It bounds
-#: the per-query union width and the tombstone lists riding in query plans.
+#: the live segments' tombstones may number at most this fraction of the
+#: base's documents; the update that would exceed it folds base + segments
+#: into a fresh base, which the next write_fts_index persists through the full
+#: layout write. Every segment's tombstones hold each id it adds or removes,
+#: so this bounds the tombstone lists riding in query plans and, as an update
+#: that changes nothing adds no segment, the per-query union width — for
+#: delete-only waves too.
 COMPACT_FRACTION = 0.25
 
 
@@ -91,9 +96,6 @@ class FtsSegment:
     df: dict             # term -> its df after this segment, for every term it touched
     n_docs: int          # documents added
     id: str              # generation id of the index this segment produced
-    #: added doc id -> (dl, terms), kept by update_fts_index so that a later
-    #: removal of these docs needs no lookup; None on a segment read from disk
-    docs: dict | None = None
 
 
 @dataclass
@@ -183,13 +185,17 @@ def _pinned(df: DataFrame) -> DataFrame:
     is rebuilt from the CURRENT files whenever that path is written again
     (Spark re-caches every plan reading it) — a snapshot rewritten by CDC
     would silently change an index built from it, while segment maintenance
-    reads the parent's content for its stats deltas. Frames that read no
-    files (local rows, RDDs) are returned as they are."""
+    reads the parent's content for its stats deltas. The checkpoint is kept
+    on local disk only: the caches built over it are the in-memory copy, and
+    it is read again only to recompute them. Frames that read no files
+    (local rows, RDDs) are returned as they are."""
+    from pyspark import StorageLevel
+
     it = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
     while it.hasNext():
         if it.next().getClass().getSimpleName() in (
                 "LogicalRelation", "DataSourceV2Relation", "HiveTableRelation"):
-            return df.localCheckpoint(eager=False)
+            return df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     return df
 
 
@@ -277,38 +283,19 @@ def _segment_frames(docs: DataFrame, id_col: str, text_col: str):
 
 def _removed_docs(index: FtsIndex, dead: set):
     """(dl list, per-term doc counts) of the docs in ``dead`` that are live
-    in ``index``. Docs living in a segment this process built are answered
-    from its ``docs``; the rest are one IN-set scan of the base (or of the
-    whole live index when some segment was read from disk)."""
-    base = index.base or index
-    dls, dfs, lookup = [], Counter(), set()
-    if any(s.docs is None for s in index.segments):
-        lookup, frames = dead, index
-    else:
-        frames = base
-        for g in dead:
-            for seg in reversed(index.segments):
-                if g in seg.docs:
-                    dl, terms = seg.docs[g]
-                    dls.append(dl)
-                    dfs.update(terms)
-                    break
-                if g in seg.tombstones:
-                    break
-            else:
-                lookup.add(g)
-    if lookup:
-        gone = sorted(lookup)
-        rows = (
-            frames.doclens.where(_in_set("doc_id", gone)).select(
-                F.col("dl").cast("long").alias("dl"), F.lit(None).cast("string").alias("term"))
-            .unionByName(frames.postings.where(_in_set("doc_id", gone)).select(
-                F.lit(None).cast("long").alias("dl"), "term"))
-            .collect()
-        )
-        dls += [r.dl for r in rows if r.term is None]
-        dfs.update(r.term for r in rows if r.term is not None)
-    return dls, dfs
+    in ``index``: one IN-set scan of its live doclens and postings."""
+    if not dead:
+        return [], Counter()
+    gone = sorted(dead)
+    rows = (
+        index.doclens.where(_in_set("doc_id", gone)).select(
+            F.col("dl").cast("long").alias("dl"), F.lit(None).cast("string").alias("term"))
+        .unionByName(index.postings.where(_in_set("doc_id", gone)).select(
+            F.lit(None).cast("long").alias("dl"), "term"))
+        .collect()
+    )
+    return ([r.dl for r in rows if r.term is None],
+            Counter(r.term for r in rows if r.term is not None))
 
 
 def _parent_df(index: FtsIndex, terms: set) -> dict:
@@ -341,14 +328,14 @@ def update_fts_index(
     are the removed ids plus the added ids (an upsert is remove + add). N,
     Σdl and the df of every touched term follow from the parent's stats and
     delta-sized collects: the added docs' (doc_id, term, tf) rows (which
-    also materialize the segment), the dl and terms of removed docs — kept
-    on the driver for docs of segments built here, else one IN-set scan of
-    the base — and the base's df of touched terms no segment holds. The
-    parent's corpus-sized frames are never re-partitioned or cached again.
-    Once the segments would hold more than ``COMPACT_FRACTION`` of the
-    base's documents, the result is instead a fresh base: the live frames
-    copartitioned and cached as a full build would (O(corpus), once per
-    compaction). Ids in ``docs_added`` are assumed unique. A base document
+    also materialize the segment), the dl and terms of the parent's live
+    docs among the dead ids (one IN-set scan) and the base's df of touched
+    terms no segment holds. The parent's corpus-sized frames are never
+    re-partitioned or cached again. An update that adds and removes nothing
+    returns ``index`` itself. Once the segments' tombstones would outnumber
+    ``COMPACT_FRACTION`` of the base's documents, the result is instead a
+    fresh base: the live frames copartitioned and cached as a full build
+    would (O(corpus), once per compaction). Ids in ``docs_added`` are assumed unique. A base document
     with no tokens has no doclens row, so its removal does not lower N
     (documents added by an update keep a dl-0 row and do)."""
     base = index.base or index
@@ -358,6 +345,7 @@ def update_fts_index(
         grouped, seg_postings, seg_doclens = _segment_frames(docs_added, id_col, text_col)
         rows = grouped.select("doc_id", "term", "tf").collect()
     else:
+        grouped = None
         seg_postings = spark.createDataFrame(
             [], f"term string, doc_id {id_type}, tf bigint, positions array<int>")
         seg_doclens = spark.createDataFrame([], f"doc_id {id_type}, dl int")
@@ -368,6 +356,10 @@ def update_fts_index(
         docs[r.doc_id] = (dl + r.tf, terms + ((r.term,) if r.term is not None else ()))
     added_df = Counter(t for _, terms in docs.values() for t in terms)
     dead = set(doc_ids_removed or ()) | set(docs)
+    if not dead:  # nothing added or removed
+        if grouped is not None:
+            grouped.unpersist()
+        return index
     removed_dl, removed_df = _removed_docs(index, dead)
     parent_df = _parent_df(index, set(added_df) | set(removed_df))
     n_docs = index.n_docs + len(docs) - len(removed_dl)
@@ -376,10 +368,10 @@ def update_fts_index(
     df = {t: parent_df.get(t, 0) + added_df[t] - removed_df[t]
           for t in set(added_df) | set(removed_df)}
     seg = FtsSegment(seg_postings, seg_doclens, tuple(sorted(dead)), df,
-                     len(docs), _new_id(), docs)
+                     len(docs), _new_id())
     segments = index.segments + (seg,)
     postings, doclens, df_by_term = _live_frames(base, segments)
-    if sum(s.n_docs for s in segments) <= COMPACT_FRACTION * base.n_docs:
+    if sum(len(s.tombstones) for s in segments) <= COMPACT_FRACTION * base.n_docs:
         return FtsIndex(postings, doclens, n_docs, avgdl, index.id_col, df_by_term,
                         base.num_buckets, sum_dl, base, segments,
                         index.lineage + (seg.id,))
@@ -654,8 +646,9 @@ def _write_base(index: FtsIndex, store: HadoopDir, num_buckets: int) -> None:
     inverted list, never the corpus-sized doclens — the disk-postings posture
     of the reference (tantivy.rs keeps postings and per-doc norms on disk;
     queries touch only the looked-up terms). The corpus stats are committed
-    with the layout (sidecar + vocab-sized df parquet), as Tantivy stores
-    segment stats in the committed index rather than recounting at open.
+    with the layout (the manifest + vocab-sized df parquet), as Tantivy
+    stores segment stats in the committed index rather than recounting at
+    open.
 
     The manifest log and segments go first, so no manifest ever pairs old
     segments with the new base; this write itself replaces the base in
@@ -700,8 +693,6 @@ def _write_base(index: FtsIndex, store: HadoopDir, num_buckets: int) -> None:
 
     parallel_legs(_w_postings, _w_doclens, _w_df_by_term)
     stats = _manifest_stats(index)
-    store.write_json({"n_docs": index.n_docs, "avgdl": index.avgdl,
-                      "num_buckets": num_buckets}, "_fts_meta.json")
     _commit_manifest(store, 1, {
         **stats, "index_id": index.lineage[-1], "lineage": [index.lineage[-1]],
         "num_buckets": num_buckets, "base": stats, "segments": [],
@@ -742,7 +733,7 @@ def read_fts_index(spark, path: str, num_buckets: int = 32) -> FtsIndex:
         n_docs, sum_dl = manifest["base"]["n_docs"], manifest["base"]["sum_dl"]
         avgdl = manifest["base"]["avgdl"]
         df_by_term = spark.read.parquet(store.uri("df_by_term")).cache()
-    elif store.exists("_fts_meta.json"):
+    elif store.exists("_fts_meta.json"):  # layout written before manifests
         meta = store.read_json("_fts_meta.json")
         n_docs, avgdl, sum_dl = meta["n_docs"], meta["avgdl"], None
         df_by_term = spark.read.parquet(store.uri("df_by_term")).cache()
