@@ -284,8 +284,6 @@ def _segment_frames(docs: DataFrame, id_col: str, text_col: str):
 def _removed_docs(index: FtsIndex, dead: set):
     """(dl list, per-term doc counts) of the docs in ``dead`` that are live
     in ``index``: one IN-set scan of its live doclens and postings."""
-    if not dead:
-        return [], Counter()
     gone = sorted(dead)
     rows = (
         index.doclens.where(_in_set("doc_id", gone)).select(
